@@ -27,9 +27,11 @@ by tests/test_catalog.py.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import SparkSession
 
+from .scheduler import run_concurrently
 from .session import get_spark
 
 LAYERS = ("raw", "staging", "intermediate", "marts")
@@ -111,18 +113,19 @@ def register_pipeline_outputs(
     raw_paths: dict[str, str],
     materialized_paths: dict[str, tuple[str, bool]],
 ) -> list[str]:
-    """Catalog every materialized pipeline output + raw source.
+    """Catalog every materialized pipeline output + raw source, the
+    tables concurrently (``scheduler.run_concurrently``).
 
     ``materialized_paths`` maps model name -> (path, partitioned).
-    Returns the fully-qualified names registered, for logging/tests.
+    Returns the fully-qualified names registered, in argument order, for
+    logging/tests.
     """
     create_layer_databases(spark)
-    registered = []
-    for raw_name, path in raw_paths.items():
-        register_external_table(spark, "raw", raw_name, path)
-        registered.append(f"raw.{raw_name}")
-    for model_name, (path, partitioned) in materialized_paths.items():
-        db = layer_for_model(model_name)
-        register_external_table(spark, db, model_name, path, partitioned=partitioned)
-        registered.append(f"{db}.{model_name}")
-    return registered
+    tables = [("raw", name, path, False) for name, path in raw_paths.items()] + [
+        (layer_for_model(name), name, path, partitioned)
+        for name, (path, partitioned) in materialized_paths.items()
+    ]
+    run_concurrently(
+        spark, [partial(register_external_table, spark, *table) for table in tables]
+    )
+    return [f"{db}.{name}" for db, name, _, _ in tables]

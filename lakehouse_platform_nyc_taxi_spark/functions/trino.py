@@ -86,17 +86,27 @@ def time_of_day(ts: Column | str) -> Column:
 
 
 def trino_round(col: Column, n: int = 0) -> Column:
-    """Trino/Presto ``round(double, n)``: sign·floor(|x|·10ⁿ + 0.5)/10ⁿ.
+    """Trino/Presto ``round(double, n)``: round |x|·10ⁿ half away from
+    zero, then divide by 10ⁿ and restore the sign.
 
     NOT Spark's ``F.round``: Spark rounds the *exact binary* value
     (BigDecimal HALF_UP), so e.g. x = 12.95/14 ≈ 0.92499999999999993
     rounds to 0.92; Trino (and DuckDB, empirically identical on doubles)
-    scales first — x·100 rounds to 92.5 exactly, +0.5 → 93 → 0.93.
-    Composing the same IEEE ops here makes results bit-identical to the
-    oracle engines. All built-ins, codegen-friendly.
+    scales first — x·100 rounds to 92.5 exactly, which rounds to 93 →
+    0.93. Composing the same IEEE ops here makes results bit-identical to
+    the oracle engines. All built-ins, codegen-friendly.
 
-    Exact domain: |x|·10ⁿ < 2⁵³ (≈9e15). Beyond that the scaled product
-    exceeds double integer precision and engines diverge in the last
+    The tie test is exact: with s = |x|·10ⁿ the result is
+    floor(s - 0.5) + 1, and s - 0.5 is exact for 0.25 <= s < 2⁵² (below
+    0.25, any rounding of it still floors to -1). floor(s + 0.5) is not:
+    0.49999999999999994 + 0.5 rounds up to 1.0, so it returned 1 where
+    Trino (``Math.round``) and DuckDB return 0. The same results come from
+    floor(s) + (s - floor(s) >= 0.5), but that names s three times, and
+    the harness rounds large aggregate expressions whose copies all enter
+    the plan.
+
+    Exact domain: |x|·10ⁿ < 2⁵² (≈4.5e15). Beyond that the scaled product
+    has no fractional bits left and engines diverge in the last
     bits (property-tested in tests/test_trino_properties.py); every
     value the harness rounds — prices, ratios, scores — is far inside.
 
@@ -112,7 +122,7 @@ def trino_round(col: Column, n: int = 0) -> Column:
     driver oracle).
     """
     factor = F.lit(float(10**n))
-    scaled = F.floor(F.abs(col) * factor + F.lit(0.5)).cast("double")
+    scaled = (F.floor(F.abs(col) * factor - F.lit(0.5)) + F.lit(1)).cast("double")
     return (scaled / factor) * F.signum(col)
 
 

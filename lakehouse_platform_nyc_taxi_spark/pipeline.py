@@ -4,7 +4,15 @@ The reference's orchestration (Airflow DAG airflow/dags/nyc_taxi_pipeline.py:49-
 sequencing dbt staging -> intermediate -> marts -> test) collapses to a
 declarative registry of model functions executed in dependency order, with
 per-model materialization (view | table | incremental) and the Airflow
-retry policy (2 retries).
+retry policy (2 retries), applied to transient errors only: a model whose
+plan does not analyse or whose code is wrong fails at its first attempt.
+
+Models run in waves by dependency depth, the models of one wave
+concurrently on up to ``defaultParallelism`` threads
+(``scheduler.run_concurrently``) — dbt's ``threads: 4``
+(dbt/profiles.yml:13). The 4 staging models build together, and so do
+``fct_trips_daily`` and ``fct_trips_monthly``. When a model fails, the
+rest of its wave finishes and no later wave starts.
 
 A "view" model stays unmaterialized DataFrame lineage — Catalyst fuses the
 whole staging->unified->enriched->cleaned chain into the mart jobs, so the
@@ -18,7 +26,15 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+from functools import partial
 
+from pyspark.errors import (
+    AnalysisException,
+    ArithmeticException,
+    DateTimeException,
+    IllegalArgumentException,
+    UnsupportedOperationException,
+)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +47,26 @@ from .models import (
     int_trips_enriched,
     int_trips_unified,
 )
+from .scheduler import run_concurrently
 from .sources.writers import _path_exists, incremental_delete_insert, overwrite_table
+
+#: Errors a retry cannot fix: the plan does not parse or analyse
+#: (``ParseException`` is an ``AnalysisException``), the data breaks an
+#: expression the same way every time, or the model code itself is wrong.
+#: Anything else (lost executors, I/O, the py4j link) is retried.
+_DETERMINISTIC = (
+    AnalysisException,
+    ArithmeticException,
+    DateTimeException,
+    IllegalArgumentException,
+    UnsupportedOperationException,
+    AttributeError,
+    LookupError,
+    NameError,
+    NotImplementedError,
+    TypeError,
+    ValueError,
+)
 
 
 @dataclass
@@ -132,6 +167,92 @@ def taxi_models(snapshot_staging: Sequence[str] = ()) -> list[Model]:
     return models
 
 
+def _waves(models: Sequence[Model]) -> list[list[Model]]:
+    """Group models by dependency depth, in registration order within a
+    wave: a model on raw sources only is in wave 0, and every other model
+    is one wave after its deepest dependency."""
+    depth: dict[str, int] = {}
+    waves: list[list[Model]] = []
+    for m in models:  # registration order is topological
+        d = max((depth.get(dep, -1) + 1 for dep in m.deps), default=0)
+        depth[m.name] = d
+        if d == len(waves):
+            waves.append([])
+        waves[d].append(m)
+    return waves
+
+
+def _materialize(
+    spark: SparkSession,
+    model: Model,
+    raw_paths: dict[str, str],
+    ctx: dict[str, DataFrame],
+    warehouse_dir: str,
+    full_refresh: bool,
+) -> tuple[DataFrame, dict[str, int] | None]:
+    """Build one model from its inputs; returns the DataFrame downstream
+    models read and, for a ``table`` model with expectations, their
+    observed counts."""
+    inputs = [
+        spark.read.parquet(raw_paths[dep[4:]]) if dep.startswith("raw.") else ctx[dep]
+        for dep in model.deps
+    ]
+    df = model.fn(*inputs)
+    path = f"{warehouse_dir}/{model.name}"
+    if model.materialized == "incremental":
+        if full_refresh and _path_exists(spark, path):
+            overwrite_table(df, path, model.partition_by or None)
+        else:
+            from .models.staging import incremental_watermark_filter
+
+            target = spark.read.parquet(path) if _path_exists(spark, path) else None
+            if target is not None:
+                df = model.fn(incremental_watermark_filter(inputs[0], target))
+            incremental_delete_insert(spark, df, path, model.unique_key, model.partition_by)
+        return spark.read.parquet(path), None
+    if model.materialized == "snapshot":
+        from .models.staging import incremental_watermark_filter
+        from .sources import snapshots as snap
+
+        if snap.current_version(path) is None:
+            snap.create_table(df, path)
+            for cname, expr in (model.constraints or {}).items():
+                snap.add_constraint(spark, path, cname, expr)
+        else:
+            if full_refresh:
+                snap.delete_where(spark, path, F.lit(True))
+            else:
+                target = snap.read_table(spark, path)
+                df = model.fn(incremental_watermark_filter(inputs[0], target))
+            # delete+insert increment as ONE ACID commit: keys are
+            # replaced wholesale and within-batch duplicate keys are kept,
+            # matching the dbt delete+insert contract (hence no source-key
+            # validation); constraints and schema drift are enforced by
+            # the table itself
+            snap.merge_into(
+                spark, path, df,
+                key_cols=list(model.unique_key),
+                validate_source_keys=False,
+                merge_schema=True,
+            )
+        return snap.read_table(spark, path), None
+    if model.materialized == "table":
+        dq = None
+        if model.expectations:
+            from .quality.observers import observed_write
+
+            dq = observed_write(
+                df,
+                path,
+                {n: F.expr(e) for n, e in model.expectations.items()},
+                partition_by=list(model.partition_by) or None,
+            )
+        else:
+            overwrite_table(df, path, model.partition_by or None)
+        return spark.read.parquet(path), dq
+    return df, None  # view
+
+
 def run_pipeline(
     spark: SparkSession,
     raw_paths: dict[str, str],
@@ -142,7 +263,9 @@ def run_pipeline(
     full_refresh: bool = False,
     register_catalog: bool = False,
 ) -> PipelineResult:
-    """Execute the model DAG (registration order is already topological).
+    """Execute the model DAG (registration order is already topological)
+    in concurrent waves; ``built``, ``timings`` and ``dq_counts`` keep
+    registration order.
 
     ``raw_paths`` maps raw table name -> parquet path. Materialized models
     land under ``warehouse_dir/<model>``; view models pass their DataFrame
@@ -158,98 +281,40 @@ def run_pipeline(
     models = list(models) if models is not None else taxi_models()
     result = PipelineResult()
     ctx: dict[str, DataFrame] = {}
+    done: dict[str, tuple[DataFrame, float, dict[str, int] | None]] = {}
 
-    for model in models:
+    def build(model: Model):
         start = time.monotonic()
-        attempt = 0
-        while True:
+        for attempt in range(retries + 1):
             try:
-                inputs = []
-                for dep in model.deps:
-                    if dep.startswith("raw."):
-                        inputs.append(spark.read.parquet(raw_paths[dep[4:]]))
-                    else:
-                        inputs.append(ctx[dep])
-                df = model.fn(*inputs)
-                path = f"{warehouse_dir}/{model.name}"
-                if model.materialized == "incremental":
-                    if full_refresh and _path_exists(spark, path):
-                        overwrite_table(df, path, model.partition_by or None)
-                    else:
-                        from .models.staging import incremental_watermark_filter
-
-                        target = (
-                            spark.read.parquet(path)
-                            if _path_exists(spark, path)
-                            else None
-                        )
-                        if target is not None:
-                            raw_df = inputs[0]
-                            filtered_raw = incremental_watermark_filter(raw_df, target)
-                            df = model.fn(filtered_raw)
-                        incremental_delete_insert(
-                            spark, df, path, model.unique_key, model.partition_by
-                        )
-                    ctx[model.name] = spark.read.parquet(path)
-                elif model.materialized == "snapshot":
-                    from .models.staging import incremental_watermark_filter
-                    from .sources import snapshots as snap
-
-                    if snap.current_version(path) is None:
-                        snap.create_table(df, path)
-                        for cname, expr in (model.constraints or {}).items():
-                            snap.add_constraint(spark, path, cname, expr)
-                    else:
-                        if full_refresh:
-                            snap.delete_where(spark, path, F.lit(True))
-                        else:
-                            raw_df = inputs[0]
-                            target = snap.read_table(spark, path)
-                            df = model.fn(
-                                incremental_watermark_filter(raw_df, target)
-                            )
-                        # delete+insert increment as ONE ACID commit:
-                        # keys are replaced wholesale and within-batch
-                        # duplicate keys are kept, matching the dbt
-                        # delete+insert contract (hence no source-key
-                        # validation); constraints and schema drift are
-                        # enforced by the table itself
-                        snap.merge_into(
-                            spark, path, df,
-                            key_cols=list(model.unique_key),
-                            validate_source_keys=False,
-                            merge_schema=True,
-                        )
-                    ctx[model.name] = snap.read_table(spark, path)
-                elif model.materialized == "table":
-                    if model.expectations:
-                        from .quality.observers import observed_write
-
-                        result.dq_counts[model.name] = observed_write(
-                            df,
-                            path,
-                            {
-                                n: F.expr(e)
-                                for n, e in model.expectations.items()
-                            },
-                            partition_by=list(model.partition_by) or None,
-                        )
-                    else:
-                        overwrite_table(df, path, model.partition_by or None)
-                    ctx[model.name] = spark.read.parquet(path)
-                else:  # view
-                    ctx[model.name] = df
-                ctx[model.name].createOrReplaceTempView(model.name)
-                result.built[model.name] = ctx[model.name]
-                break
+                df, dq = _materialize(spark, model, raw_paths, ctx, warehouse_dir, full_refresh)
+                df.createOrReplaceTempView(model.name)
+                return df, time.monotonic() - start, dq
             except Exception as exc:  # retry like the Airflow DAG (retries=2)
-                attempt += 1
-                if attempt > retries:
-                    result.errors[model.name] = f"{type(exc).__name__}: {exc}"
-                    return result
+                if attempt == retries or isinstance(exc, _DETERMINISTIC):
+                    return exc
                 if retry_delay_s:
                     time.sleep(retry_delay_s)
-        result.timings[model.name] = time.monotonic() - start
+
+    for wave in _waves(models):
+        outcomes = run_concurrently(spark, [partial(build, m) for m in wave])
+        for model, outcome in zip(wave, outcomes):
+            if isinstance(outcome, Exception):
+                result.errors[model.name] = f"{type(outcome).__name__}: {outcome}"
+            else:
+                ctx[model.name] = outcome[0]
+                done[model.name] = outcome
+        if result.errors:
+            break
+    for model in models:  # registration order, whatever the waves were
+        if model.name in done:
+            df, seconds, dq = done[model.name]
+            result.built[model.name] = df
+            result.timings[model.name] = seconds
+            if dq is not None:
+                result.dq_counts[model.name] = dq
+    if result.errors:
+        return result
 
     if register_catalog:
         from .catalog import register_pipeline_outputs

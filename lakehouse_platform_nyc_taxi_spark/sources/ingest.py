@@ -9,8 +9,21 @@ partitioned append with schema drift tolerated, then a per-source success/
 records summary (`:240-271`).
 
 Here the S3 staging hop disappears (any Spark-readable path works —
-local, file://, http fetched to a shared dir); everything else keeps the
-same semantics, including the skip/overwrite idempotency matrix. The
+local, file://, http fetched to a shared dir), and the probe, delete and
+append become one step: a file-system existence check on the
+``year=Y/month=M`` directory (no Spark job), then one dynamic partition
+overwrite that counts its rows with ``Dataset.observe`` as it writes.
+The old month stays in place until the new files are committed, and the
+commit swaps the directory with one delete and one rename. So the window
+in which a crash loses the month shrinks from the reference's whole
+fetch-and-append to those two metadata operations. The skip/overwrite
+idempotency matrix is kept; a month that is missing at the source leaves
+an existing partition in place.
+
+``ingest_bulk`` ingests all months at once on up to
+``defaultParallelism`` threads (``scheduler.run_concurrently``). Each
+dynamic overwrite stages its files in its own ``.spark-staging-<uuid>``
+directory, so several months of one table are written concurrently. The
 fetch stays a driver-side download exactly like the reference: a monthly
 parquet is one file; executors parallelize over the *rows* after the
 scan, not the download.
@@ -23,11 +36,13 @@ import shutil
 import urllib.error
 import urllib.request
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .writers import append_partitioned, delete_partition, partition_exists
+from ..scheduler import run_concurrently
+from .writers import _path_exists, dynamic_partition_overwrite
 
 
 @dataclass
@@ -90,27 +105,31 @@ def ingest_month(
     """Ingest one monthly file. Returns (status, records) where status is
     'loaded' | 'skipped' | 'missing'.
 
-    Idempotency matrix (ingest_spark_bulk.py:96-106): partition exists and
-    not overwrite -> skip without fetching; exists and overwrite -> delete
-    the partition, then append.
+    Idempotency matrix (ingest_spark_bulk.py:96-106): the partition
+    directory exists and not overwrite -> skip without fetching;
+    otherwise fetch, then replace the partition with one dynamic
+    partition overwrite, which leaves every other partition untouched.
+    A missing file (404) leaves an existing partition as it is. The row
+    count rides the write (``Dataset.observe``), not a separate job.
     """
-    part = {"year": spec.year, "month": spec.month}
-    if partition_exists(spark, target_path, part):
-        if not overwrite:
-            return "skipped", 0
-        delete_partition(spark, target_path, part)
-    local = fetch(spec.url, staging_dir)
+    part = f"{target_path}/year={spec.year}/month={spec.month}"
+    if not overwrite and _path_exists(spark, part):
+        return "skipped", 0
+    # one staging dir per unit: concurrent fetches never share a file name
+    unit_dir = os.path.join(staging_dir, f"{spec.source}-{spec.year}-{spec.month:02d}")
+    local = fetch(spec.url, unit_dir)
     if local is None:
         return "missing", 0
-    df = spark.read.parquet(local)  # schema-on-read, drift tolerated on append
-    n = df.count()
+    rows = Observation()
     df = (
-        df.withColumn("year", F.lit(int(spec.year)))
+        spark.read.parquet(local)  # schema-on-read
+        .observe(rows, F.count(F.lit(1)).alias("n"))
+        .withColumn("year", F.lit(int(spec.year)))
         .withColumn("month", F.lit(int(spec.month)))
         .withColumn("loaded_at", F.current_timestamp())
     )
-    append_partitioned(df, target_path, partition_by=("year", "month"))
-    return "loaded", n
+    dynamic_partition_overwrite(df, target_path, ("year", "month"))
+    return "loaded", int(rows.get["n"])
 
 
 def ingest_bulk(
@@ -123,19 +142,24 @@ def ingest_bulk(
     """The reference's per-color loop with its summary/exit contract:
     each source lands in ``{target_root}/{source}_trips``; individual
     failures are recorded, not raised, and ``report.ok`` is the exit
-    status (`ingest_spark_bulk.py:240-271`)."""
-    report = IngestReport()
-    for spec in specs:
+    status (`ingest_spark_bulk.py:240-271`). All months are ingested
+    concurrently; the report lists them in ``specs`` order."""
+
+    def one(spec: MonthSpec) -> tuple[str, int | str]:
         target = os.path.join(target_root, f"{spec.source}_trips")
         try:
-            status, n = ingest_month(spark, spec, target, staging_dir, overwrite)
+            return ingest_month(spark, spec, target, staging_dir, overwrite)
         except Exception as e:  # per-source isolation, like the reference
-            report.failed[spec.source] = str(e)
-            continue
+            return "failed", str(e)
+
+    report = IngestReport()
+    for spec, (status, n) in zip(specs, run_concurrently(spark, [partial(one, s) for s in specs])):
         if status == "loaded":
             report.loaded[spec.source] = report.loaded.get(spec.source, 0) + n
         elif status == "skipped":
             report.skipped.append(spec.source)
-        else:
+        elif status == "missing":
             report.missing.append(spec.source)
+        else:
+            report.failed[spec.source] = n
     return report

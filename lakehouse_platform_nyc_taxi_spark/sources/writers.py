@@ -1,4 +1,4 @@
-"""Table sinks: partitioned append, overwrite (CTAS), incremental upsert.
+"""Table sinks: overwrite (CTAS), dynamic partition overwrite, incremental upsert.
 
 Mirrors the reference's sink surface (SURVEY.md §2.1) on plain parquet —
 the container has no Delta/Iceberg jars, so DML (DELETE/MERGE) is
@@ -7,13 +7,14 @@ that scales: only the `(year, month)` partitions present in the incoming
 batch are read and rewritten, never the whole table.
 
 Reference parity notes:
-- S6 partitioned append (ingest_spark_bulk.py:147-152): append +
-  mergeSchema stands in for Iceberg ``accept-any-schema``.
+- S6 partitioned append and S11/S12 partition probe + delete
+  (ingest_spark_bulk.py:71-81, 147-152): the idempotent re-ingest they
+  implement is one ``dynamic_partition_overwrite`` per month
+  (sources/ingest.py), which replaces a partition directory only once its
+  new files are committed.
 - S9 incremental delete+insert (stg_nyc_taxi__yellow_trips.sql:2-8):
   delete target rows whose key appears in the batch, then insert the
   batch. Duplicates *within* one batch survive — that quirk is kept.
-- S12 partition delete (ingest_spark_bulk.py:71-81): dynamic partition
-  overwrite of the named partition.
 """
 
 from __future__ import annotations
@@ -32,21 +33,6 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def append_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = ("year", "month"),
-    merge_schema: bool = True,
-) -> None:
-    """S6: partitioned append with schema drift tolerated."""
-    (
-        df.write.mode("append")
-        .option("mergeSchema", str(merge_schema).lower())
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
 def overwrite_table(
     df: DataFrame, path: str, partition_by: Sequence[str] | None = None
 ) -> None:
@@ -55,40 +41,6 @@ def overwrite_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def delete_partition(
-    spark: SparkSession,
-    path: str,
-    partition_values: dict[str, object],
-) -> None:
-    """S12: idempotent re-ingest — drop one partition.
-
-    A metadata-style delete (the parquet analogue of Iceberg's
-    ``DELETE FROM t WHERE year=Y AND month=M``): remove the partition
-    directory, never touching data in other partitions.
-    """
-    subdir = "/".join(f"{col}={val}" for col, val in partition_values.items())
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{subdir}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
-
-
-def partition_exists(spark: SparkSession, path: str, partition_values: dict[str, object]) -> bool:
-    """S11: partition existence probe; missing table -> False.
-
-    Filters on partition columns only, so Catalyst answers it from
-    partition-directory pruning without scanning data files.
-    """
-    if not _path_exists(spark, path):
-        return False
-    df = spark.read.parquet(path)
-    cond = F.lit(True)
-    for col, val in partition_values.items():
-        cond = cond & (F.col(col) == F.lit(val))
-    return df.filter(cond).limit(1).count() > 0
 
 
 def incremental_delete_insert(

@@ -40,7 +40,7 @@ def test_ingest_idempotency_matrix(spark, tmp_path):
     assert status == "skipped"
     assert spark.read.parquet(target).count() == 50  # no duplicate append
 
-    # overwrite: delete partition then append (still 50, fresh loaded_at)
+    # overwrite: the partition is replaced (still 50, fresh loaded_at)
     status, n = ingest_month(spark, spec, target, staging, overwrite=True)
     assert status == "loaded" and n == 50
     assert spark.read.parquet(target).count() == 50
@@ -60,3 +60,37 @@ def test_ingest_bulk_missing_month_is_skip_not_failure(spark, tmp_path):
     assert report.loaded == {"yellow": 50}
     assert report.missing == ["green"]
     assert report.ok
+
+
+def test_ingest_bulk_writes_months_of_one_table_concurrently(spark, tmp_path):
+    f1 = _monthly_file(spark, tmp_path, "jan")
+    f2 = _monthly_file(spark, tmp_path, "feb")
+    root = tmp_path / "tgt3"
+    report = ingest_bulk(
+        spark,
+        [MonthSpec("yellow", f1, 2023, 1), MonthSpec("yellow", f2, 2023, 2)],
+        str(root),
+        str(tmp_path / "staging3"),
+    )
+    assert report.ok and report.loaded == {"yellow": 100}
+    got = spark.read.parquet(str(root / "yellow_trips")).groupBy("year", "month").count()
+    assert {(r.year, r.month, r["count"]) for r in got.collect()} == {
+        (2023, 1, 50),
+        (2023, 2, 50),
+    }
+    # each dynamic overwrite cleaned up its own staging directory
+    assert not list((root / "yellow_trips").glob(".spark-staging-*"))
+
+
+def test_overwrite_with_missing_month_keeps_the_partition(spark, tmp_path):
+    """Fetch first, replace second: a month that is gone at the source
+    (404) no longer deletes the copy already ingested."""
+    f = _monthly_file(spark, tmp_path, "m4")
+    target = str(tmp_path / "tgt4" / "yellow_trips")
+    staging = str(tmp_path / "staging4")
+    assert ingest_month(spark, MonthSpec("yellow", f, 2023, 4), target, staging)[0] == "loaded"
+
+    gone = MonthSpec("yellow", str(tmp_path / "gone.parquet"), 2023, 4)
+    status, n = ingest_month(spark, gone, target, staging, overwrite=True)
+    assert (status, n) == ("missing", 0)
+    assert spark.read.parquet(target).filter(F.col("month") == 4).count() == 50

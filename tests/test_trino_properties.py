@@ -27,7 +27,7 @@ from lakehouse_platform_nyc_taxi_spark.functions.trino import (
 # shrinking; instead use @given on pure-python mirrors where possible and
 # batch Spark checks over hypothesis-chosen extremes.
 
-# trino_round's documented exact domain: |x| * 10^nd must stay below 2^53
+# trino_round's documented exact domain: |x| * 10^nd must stay below 2^52
 # (beyond it, double scaling loses integer precision and engines diverge in
 # the last bits — outside any value the harness rounds: prices, ratios).
 DOUBLES = st.floats(
@@ -55,6 +55,32 @@ def test_trino_round_matches_duckdb(spark, xs, nd):
         con.execute("SELECT round(?::DOUBLE, ?)", [x, nd]).fetchone()[0] for x in xs
     ]
     assert got == exp
+
+
+def test_trino_round_exact_tie_test(spark):
+    """Values next to a .5 tie: 0.49999999999999994 + 0.5 rounds up to 1.0
+    in IEEE arithmetic, so floor(s + 0.5) gave 1 where DuckDB and Trino
+    give 0 (a taxi ``cost_per_minute`` of 0.004999999999999999 rounded to
+    0.01)."""
+    cases = [
+        (0.49999999999999994, 0, 0.0),
+        (-0.49999999999999994, 0, -0.0),
+        (0.004999999999999999, 2, 0.0),
+        (0.5, 0, 1.0),
+        (2.5, 0, 3.0),
+        (-2.5, 0, -3.0),
+        (12.95 / 14, 2, 0.93),
+        (4503599627370495.5, 0, 4503599627370496.0),  # the last tie below 2^52
+    ]
+    df = spark.createDataFrame([(x,) for x, _, _ in cases], "x double")
+    row = df.select(
+        *[trino_round(F.col("x"), nd).alias(f"r{i}") for i, (_, nd, _) in enumerate(cases)]
+    ).collect()
+    con = duckdb.connect()
+    for i, (x, nd, want) in enumerate(cases):
+        got = row[i][f"r{i}"]
+        assert got == want, (x, nd, got)
+        assert got == con.execute("SELECT round(?::DOUBLE, ?)", [x, nd]).fetchone()[0]
 
 
 @given(

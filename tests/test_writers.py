@@ -1,35 +1,18 @@
-"""Sink semantics: partitioned append, partition delete/probe, and the
-delete+insert incremental materializer (SURVEY.md S6/S9/S11/S12)."""
+"""Sink semantics: overwrite, dynamic partition overwrite and the
+delete+insert incremental materializer (SURVEY.md S7/S9)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from lakehouse_platform_nyc_taxi_spark.sources.writers import (
-    append_partitioned,
-    delete_partition,
     incremental_delete_insert,
     overwrite_table,
-    partition_exists,
 )
 
 
 def _mk(spark, rows):
     return spark.createDataFrame(rows, "id string, v long, year int, month int")
-
-
-def test_append_and_partition_ops(spark, tmp_path):
-    path = str(tmp_path / "t")
-    append_partitioned(_mk(spark, [("a", 1, 2023, 1), ("b", 2, 2023, 2)]), path)
-    append_partitioned(_mk(spark, [("c", 3, 2023, 2)]), path)
-    assert spark.read.parquet(path).count() == 3
-    assert partition_exists(spark, path, {"year": 2023, "month": 2})
-    assert not partition_exists(spark, path, {"year": 2024, "month": 1})
-
-    delete_partition(spark, path, {"year": 2023, "month": 2})
-    left = spark.read.parquet(path)
-    assert left.count() == 1
-    assert left.first().id == "a"
 
 
 def test_incremental_delete_insert(spark, tmp_path):
